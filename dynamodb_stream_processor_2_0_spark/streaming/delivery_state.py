@@ -113,8 +113,9 @@ def apply_delivery_state(
     events: DataFrame,
     sink_ok: Callable[[int], bool] | None = None,
 ) -> DataFrame:
-    """Wire the state machine over a (streaming or batch) events frame
-    keyed by (user_id, event_type)."""
+    """Wire the state machine over a streaming events frame keyed by
+    (user_id, event_type). Streaming only: Spark rejects
+    ``applyInPandasWithState`` in a batch query."""
     return (
         events.select("user_id", "event_type", "event_id", "ts")
         .groupBy("user_id", "event_type")

@@ -5,12 +5,15 @@ matches the uninterrupted batch golden."""
 
 from __future__ import annotations
 
+import os
+import re
 import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
 from dynamodb_stream_processor_2_0_spark.operators.dedup import first_occurrence
+from dynamodb_stream_processor_2_0_spark.session import CHECKPOINT_FILE_MANAGER
 from dynamodb_stream_processor_2_0_spark.sources.catalog import load_table
 from dynamodb_stream_processor_2_0_spark.streaming import replay
 from dynamodb_stream_processor_2_0_spark.streaming.delivery_state import (
@@ -36,11 +39,32 @@ def test_exactly_once_across_restart(spark, sf_dir, provider):
     if provider is not None:
         spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     try:
-        _run_restart_scenario(spark, sf_dir)
+        checkpoint = _run_restart_scenario(spark, sf_dir)
     finally:
         spark.conf.set(
             "spark.sql.streaming.stateStore.providerClass", prior_prov
         )
+    if provider is None:
+        _assert_checkpoint_integrity(spark, checkpoint)
+
+
+def _assert_checkpoint_integrity(spark, checkpoint):
+    """The session's checkpoint manager skips FileContext's per-rename
+    ``readlink`` forks; it must not do so by dropping checksums. Spark
+    writes ``<v>.delta.crc`` only while
+    ``spark.sql.streaming.checkpoint.fileChecksum.enabled`` is on, and the
+    local file system adds Hadoop's ``.<v>.delta.crc``."""
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        CHECKPOINT_FILE_MANAGER
+    )
+    deltas = 0
+    for root, _, files in os.walk(os.path.join(checkpoint, "state")):
+        for delta in (n for n in files if re.fullmatch(r"\d+\.delta", n)):
+            deltas += 1
+            path = os.path.join(root, delta)
+            assert f"{delta}.crc" in files, f"no Spark checksum for {path}"
+            assert f".{delta}.crc" in files, f"no Hadoop checksum for {path}"
+    assert deltas, "restart wrote no state deltas"
 
 
 def _run_restart_scenario(spark, sf_dir):
@@ -103,6 +127,7 @@ def _run_restart_scenario(spark, sf_dir):
         .count()
     )
     assert mismatches == 0, "post-restart winners must equal batch first-occurrence"
+    return checkpoint
 
 
 def test_delivery_e2e_on_rocksdb_state_store(spark, sf_dir):

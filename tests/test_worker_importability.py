@@ -4,9 +4,12 @@ module-level function or class from this package.
 cloudpickle pickles NESTED functions by value, but any module-level
 function/class they reference is pickled BY REFERENCE
 (module.qualname) — so the Python worker must be able to import this
-package. The driver inserts the repo on ITS OWN sys.path only; workers
-inherit the launch cwd, so a session started from any other directory
-dies with ModuleNotFoundError inside the first mapInPandas batch
+package. Sessions from ``session.get_spark`` ship the package root to
+their workers (``spark.executorEnv.PYTHONPATH``, which the worker
+daemon needs), but a caller of ``__spark_entry__`` passes in its own
+plain SparkSession and puts the repo on ITS OWN sys.path only. Those
+workers inherit the launch cwd, so a session started from any other
+directory dies with ModuleNotFoundError inside the first mapInPandas batch
 (found live in r11: every multimodal kernel referenced the
 module-level ``_as_bytes`` and crashed the driver-hostile /tmp
 session; operators/multimodal.py now documents the local by-value-twin
